@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
+
+import graft.operators.IndexCache
 
 /** The engine's single lineage-cut seam.
   *
@@ -24,9 +27,12 @@ import org.apache.spark.sql.Dataset
   * the old eager `localCheckpoint`. Both modes materialize eagerly and
   * truncate lineage to a `LogicalRDD` leaf, so downstream plans — and
   * therefore results — are bit-identical by construction
-  * (CheckpointingSpec pins the four iterative gate queries hash-equal
+  * (CheckpointingSpec pins the iterative gate queries hash-equal
   * across modes, and pins that reliable mode writes exactly one
   * checkpoint RDD directory per cut).
+  *
+  * [[iterate]] is the one loop driver for iterative operators that
+  * carry a single state between rounds.
   *
   * Storage hygiene: [[graft.operators.IndexCache.release]] frees
   * executor BLOCKS behind a cut in either mode; reliable-mode FILES
@@ -61,5 +67,33 @@ object Checkpointing {
       }
       ds.checkpoint(true)
     }
+  }
+
+  /** Runs `step` from `init` for at most `rounds` steps, or until
+    * `changed` reports a step's (cut, materialized) output unchanged.
+    * Each output is [[cut]], then the superseded state is released —
+    * safe, as its successor no longer depends on it. A loop that cuts
+    * every other round composes two rounds into one step. A bare-cut
+    * `init` is released too; any other init may read leaves the caller
+    * still uses and is left alone. Prints `[graft] <name>: N rounds`
+    * and returns the final state with the number of steps run. */
+  def iterate(name: String, init: DataFrame, rounds: Int = Int.MaxValue,
+      changed: DataFrame => Boolean = _ => true)(
+      step: DataFrame => DataFrame): (DataFrame, Int) = {
+    var state = init
+    var n = 0
+    var more = true
+    while (more && n < rounds) {
+      val next = cut(step(state))
+      more = changed(next)
+      if (n > 0 || state.queryExecution.logical.isInstanceOf[LogicalRDD])
+        IndexCache.release(state)
+      state = next
+      n += 1
+      if (more && n < rounds && n % 25 == 0)
+        System.err.println(s"[graft] $name: still iterating after $n rounds")
+    }
+    System.err.println(s"[graft] $name: $n rounds")
+    (state, n)
   }
 }

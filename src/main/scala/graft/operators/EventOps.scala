@@ -1668,10 +1668,11 @@ object EventOps {
     * ranks (|nodes| rows, the small side at 100 TB once nodes are
     * domains: broadcast- or co-partition-able) to the share relation
     * on src, then a combinable SUM keyed on dst — plus a one-row
-    * broadcast of the dangling-mass scalar. Iteration state is
-    * `localCheckpoint`ed so lineage stays flat across the [[PrIters]]
-    * rounds — the same discipline as the CC propagation loop in
-    * [[DedupOps]]. The driver never sees rank rows; the only
+    * broadcast of the dangling-mass scalar. Iteration state is cut by
+    * [[graft.Checkpointing.iterate]] so lineage stays flat across the
+    * [[PrIters]] rounds — the same loop as the CC propagation in
+    * [[DedupOps.propagateMinLabelsCounted]]. The Spark driver never
+    * sees rank rows; the only
     * driver-side scalar is N = |nodes| (the CC loop's convergence-
     * check convention).
     *
@@ -1935,43 +1936,18 @@ object EventOps {
     }
   }
 
-  /** Personalized-teleport power iteration: identical to
-    * [[pagerankOf]] except the constant base term becomes the
-    * per-node `base` column of `baseRel` (node, base, is_seed).
-    * Dangling mass stays the uniform scalar — only the teleport is
-    * personalized. */
+  /** Personalized-teleport PageRank: the shared [[pagerankRounds]]
+    * with the constant base term replaced by the per-node `base`
+    * column of `baseRel` (node, base, is_seed). Dangling mass stays the
+    * uniform scalar — only the teleport is personalized. */
   private[graft] def pagerankPersonalizedOf(nodes: DataFrame,
       edges: DataFrame, n: Long, baseRel: DataFrame): DataFrame = {
-    require(n < PrEdgeScale,
-      s"pagerank dangling share 10^6 div n floors to 0 at n=$n >= " +
-        s"$PrEdgeScale nodes — raise PrEdgeScale before running at " +
-        "this graph scale (see Scaladoc quantization bound)")
-    val initRank = PrScale / n
-    val dShare = PrEdgeScale / n
-    val (shareRaw, danglingRaw) = pagerankShares(nodes, edges)
-    val allShare = shareRaw.transform(graft.Checkpointing.cut)
-    val danglingSrc = danglingRaw.transform(graft.Checkpointing.cut)
     val baseCk = baseRel.transform(graft.Checkpointing.cut)
-    var ranks = nodes.select(col("node"), lit(initRank).as("rank"))
-    for (it <- 1 to PrIters) {
-      val dmass = danglingSrc
-        .join(ranks, danglingSrc("src") === ranks("node"))
-        .agg(coalesce(
-          sum(expr(s"(rank * $dShare) div $PrEdgeScale")),
-          lit(0L)).as("dmass"))
-      val next = allShare
-        .join(ranks, allShare("src") === ranks("node"))
-        .groupBy(col("dst"))
-        .agg(sum(expr(s"(rank * share) div $PrEdgeScale")).as("sumc"))
-        .crossJoin(broadcast(dmass))
-        .join(baseCk, col("dst") === baseCk("node"))
+    pagerankRounds(nodes, edges, n)(
+      _.join(baseCk, col("dst") === baseCk("node"))
         .select(col("node"),
-          expr(s"base + ($PrDampNum * (sumc + dmass)) div 100")
-            .as("rank"))
-      ranks = if (it % 2 == 0 || it == PrIters) next.transform(graft.Checkpointing.cut)
-        else next
-    }
-    ranks.join(baseCk.select(col("node"), col("is_seed")), "node")
+          expr(s"base + ($PrDampNum * (sumc + dmass)) div 100").as("rank")))
+      .join(baseCk.select(col("node"), col("is_seed")), "node")
       .select(col("node"),
         col("rank").as("rank_scaled"),
         (col("rank").cast("double") / lit(PrScale.toDouble)).as("rank"),
@@ -1997,25 +1973,41 @@ object EventOps {
     (real.unionByName(selfZero), danglingSrc)
   }
 
-  /** The iteration core: `nodes` has one `node` column, `edges` is
-    * (src, dst, w). Output columns (node, rank_scaled, rank),
+  /** Uniform-teleport PageRank: `nodes` has one `node` column, `edges`
+    * is (src, dst, w). Output columns (node, rank_scaled, rank),
     * UNSORTED — callers rename and order. */
   private[graft] def pagerankOf(
       nodes: DataFrame, edges: DataFrame, n: Long): DataFrame = {
+    val baseRank = (PrScale * 15L / 100L) / n
+    pagerankRounds(nodes, edges, n)(
+      _.select(col("dst").as("node"),
+        expr(s"$baseRank + ($PrDampNum * (sumc + dmass)) div 100")
+          .as("rank")))
+      .select(col("node"),
+        col("rank").as("rank_scaled"),
+        (col("rank").cast("double") / lit(PrScale.toDouble)).as("rank"))
+  }
+
+  /** The power iteration both PageRank variants share. Each round
+    * computes the contribution relation (dst, sumc, dmass) — the
+    * quantized edge mass into `dst` plus the uniform dangling scalar —
+    * and `rank` turns it into the next (node, rank) by adding the
+    * variant's own base term. Returns (node, rank) after [[PrIters]]
+    * rounds, unsorted. */
+  private def pagerankRounds(nodes: DataFrame, edges: DataFrame, n: Long)(
+      rank: DataFrame => DataFrame): DataFrame = {
     require(n < PrEdgeScale,
       s"pagerank dangling share 10^6 div n floors to 0 at n=$n >= " +
         s"$PrEdgeScale nodes — raise PrEdgeScale before running at " +
         "this graph scale (see Scaladoc quantization bound)")
     val initRank = PrScale / n
-    val baseRank = (PrScale * 15L / 100L) / n
     // uniform share a dangling node would give every node — quantized
     // ONCE, exactly as a materialized fan-out row's share would be
     val dShare = PrEdgeScale / n
     val (shareRaw, danglingRaw) = pagerankShares(nodes, edges)
     val allShare = shareRaw.transform(graft.Checkpointing.cut)
     val danglingSrc = danglingRaw.transform(graft.Checkpointing.cut)
-    var ranks = nodes.select(col("node"), lit(initRank).as("rank"))
-    for (it <- 1 to PrIters) {
+    def round(ranks: DataFrame): DataFrame = {
       // dangling mass as ONE scalar: per-term floor (rank·s) div 10⁶
       // matches the edge formula, so adding dmass into every node's
       // contribution sum is bit-identical to the O(|dangling|·N)
@@ -2025,25 +2017,21 @@ object EventOps {
         .agg(coalesce(
           sum(expr(s"(rank * $dShare) div $PrEdgeScale")),
           lit(0L)).as("dmass"))
-      val next = allShare
+      rank(allShare
         .join(ranks, allShare("src") === ranks("node"))
         .groupBy(col("dst"))
         .agg(sum(expr(s"(rank * share) div $PrEdgeScale")).as("sumc"))
-        .crossJoin(broadcast(dmass))
-        .select(col("dst").as("node"),
-          expr(s"$baseRank + ($PrDampNum * (sumc + dmass)) div 100")
-            .as("rank"))
-      // lineage cut every OTHER round: each eager localCheckpoint is
-      // a full job, and at 8 rounds the checkpoint jobs dominated the
-      // query (measured 3.75 s on the 1.5k-node graph — overhead, not
-      // graph work). A depth-2 plan (two joins + two aggs) stays flat
-      // enough; arithmetic and result are bit-identical either way
-      ranks = if (it % 2 == 0 || it == PrIters) next.transform(graft.Checkpointing.cut)
-        else next
+        .crossJoin(broadcast(dmass)))
     }
-    ranks.select(col("node"),
-      col("rank").as("rank_scaled"),
-      (col("rank").cast("double") / lit(PrScale.toDouble)).as("rank"))
+    // two rounds per step (PrIters is even), so the lineage is cut
+    // every OTHER round: each eager cut is a full job, and at 8 rounds
+    // the cut jobs dominated the query (measured 3.75 s on the
+    // 1.5k-node graph — overhead, not graph work). A depth-2 plan (two
+    // joins + two aggs) stays flat enough; arithmetic and result are
+    // bit-identical either way
+    graft.Checkpointing.iterate("pagerank",
+      nodes.select(col("node"), lit(initRank).as("rank")), PrIters / 2)(
+      r => round(round(r)))._1
   }
 
   /** The user referral graph as DISTINCT UNDIRECTED edges `(u, v)`

@@ -1007,20 +1007,27 @@ object SimilarityOps {
 
   /** End-to-end Lloyd's TRAINING loop — [[kmeansAssign]] (assign) and
     * [[embCentroids]] (update) composed for [[KmeansIters]] rounds
-    * from the per-label-mean initialization, so the IVF coarse
-    * quantizer is trained by the engine rather than the label column
-    * standing in for it. Output: the trained centroids in long
-    * (clabel, dim, mean) format (scalar cells — driver checker rule).
+    * from the `init` centroids, so the IVF coarse quantizer is trained
+    * by the engine rather than the label column standing in for it.
+    * Output: the trained centroids (clabel, c ARRAY<DOUBLE>).
     *
     * Scale shape per round: centroids (k rows) BROADCAST to the
     * assign projection, update is one map-side-combinable agg on
     * (clabel, dim) — the corpus is scanned twice per round and never
-    * shuffled by vector. Intermediate centroids are eagerly
-    * `localCheckpoint()`ed between rounds, the same O(1)-plan-depth
+    * shuffled by vector. Each round's centroids are cut by
+    * [[graft.Checkpointing.iterate]], the same O(1)-plan-depth
     * discipline as the connected-components loop: each round's plan
     * builds on a small materialized relation, not on N stacked
     * window+agg rounds. A cluster that loses all vectors drops out
     * (both engines agree: GROUP BY emits no empty groups). */
+  private def lloydRounds(s: SparkSession, d: String,
+      init: DataFrame): DataFrame = {
+    val e = emb(s, d).select(col("vec_id"), col("embedding"))
+    graft.Checkpointing.iterate("kmeans", init, KmeansIters)(cents =>
+      toArrays(meansLong(assignToNearest(e, cents)
+        .select(col("clabel"), col("embedding")))))._1
+  }
+
   /** One trained quantizer per (session, dataset, mtime), shared by
     * [[kmeansTrain]] and [[annIvfTrained]] — the Lloyd's loop runs
     * once per dataset, like the LSH/ANN index relations. The bench
@@ -1028,23 +1035,12 @@ object SimilarityOps {
     * consumer times its marginal cost. */
   private val centroidCache = new IndexCache
 
-  /** The trained coarse quantizer: centroid arrays after
-    * [[KmeansIters]] Lloyd's rounds, eagerly materialized
-    * (localCheckpoint per round bounds plan depth; the final
-    * checkpoint IS the materialization the cache holds). */
+  /** The trained coarse quantizer: [[lloydRounds]] from the label
+    * means, eagerly materialized (the final round's cut IS the
+    * materialization the cache holds). */
   private def trainedCentroids(s: SparkSession, d: String): DataFrame =
     centroidCache.getOrBuild(s, d, embMtime(d)) {
-      val e = emb(s, d).select(col("vec_id"), col("embedding"))
-      var cents = centroids(s, d)
-      for (i <- 1 to KmeansIters) {
-        val next = toArrays(meansLong(assignToNearest(e, cents)
-          .select(col("clabel"), col("embedding")))).transform(graft.Checkpointing.cut)
-        // free the previous round's checkpoint blocks (round 1's input
-        // is the lazy label-means plan — nothing to free there)
-        if (i > 1) IndexCache.release(cents)
-        cents = next
-      }
-      cents
+      lloydRounds(s, d, centroids(s, d))
     }
 
   val kmeansTrain: Q = (s, d) =>
@@ -1070,14 +1066,8 @@ object SimilarityOps {
     * corpus is never shuffled by vector. */
   val kmeansStability: Q = (s, d) => {
     val e = emb(s, d).select(col("vec_id"), col("embedding"))
-    def train(init: DataFrame): DataFrame = {
-      var cents = init.transform(graft.Checkpointing.cut)
-      for (_ <- 1 to KmeansIters)
-        cents = toArrays(meansLong(assignToNearest(e, cents)
-          .select(col("clabel"), col("embedding"))))
-          .transform(graft.Checkpointing.cut)
-      cents
-    }
+    def train(init: DataFrame): DataFrame =
+      lloydRounds(s, d, init.transform(graft.Checkpointing.cut))
     val initB = toArrays(meansLong(emb(s, d).select(
       (Hashing.charHash(col("vec_id").cast("string")) % 10L)
         .as("clabel"),
@@ -1457,9 +1447,7 @@ object SimilarityOps {
       .select(col("vec_id"), col("dim"),
         (col("q_int8") - col("mu")).as("q_int8"))
       .transform(graft.Checkpointing.cut)
-    var v = lanes.select(col("dim")).distinct()
-      .select(col("dim"), lit(PcaVs).as("val"))
-    for (it <- 1 to PcaIters) {
+    def round(v: DataFrame): DataFrame = {
       val dots = lanes.join(v, "dim")
         .groupBy(col("vec_id"))
         .agg(sum(col("q_int8") * col("val")).as("dot"))
@@ -1467,15 +1455,17 @@ object SimilarityOps {
         .groupBy(col("dim"))
         .agg(sum(col("q_int8") * col("dot")).as("raw"))
       val m = raw.agg(max(abs(col("raw"))).as("m"))
-      val next = raw.crossJoin(broadcast(m))
+      raw.crossJoin(broadcast(m))
         .select(col("dim"),
           when(col("m") > 0L,
             expr(s"raw div (m div $PcaVs + 1)"))
             .otherwise(lit(0L)).as("val"))
-      v = if (it % 2 == 0 || it == PcaIters)
-        graft.Checkpointing.cut(next)
-      else next
     }
+    // two rounds per step (PcaIters is even): the lineage is cut every
+    // other round
+    val (v, _) = graft.Checkpointing.iterate("principal_dir",
+      lanes.select(col("dim")).distinct().select(col("dim"),
+        lit(PcaVs).as("val")), PcaIters / 2)(v => round(round(v)))
     v.select(col("dim"), col("val").as("v_scaled"),
         (col("val").cast("double") / lit(PcaVs.toDouble)).as("loading"))
       .orderBy("dim")
@@ -2580,8 +2570,8 @@ object SimilarityOps {
   }
 
   /** [[KmeansIters]] unrolled Lloyd's rounds as a CTE chain — kept
-    * structurally in sync with [[trainedCentroids]]'s loop by
-    * construction. `cent$KmeansIters` is the trained quantizer. */
+    * structurally in sync with [[lloydRounds]] by construction.
+    * `cent$KmeansIters` is the trained quantizer. */
   private def sqlLloydCtes: Seq[String] = {
     val b = Seq.newBuilder[String]
     b += sqlByd("embeddings", "CAST(embeddings.label AS BIGINT)", "byd0")

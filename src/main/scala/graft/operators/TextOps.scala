@@ -1865,10 +1865,11 @@ object TextOps {
   /** The trained merge table (step, gram, c): [[BpeMerges]] rounds of
     * count-pairs → argmax (count desc, tie → lexicographically
     * smallest pair) → apply-merge. Each round's winner is eagerly
-    * `localCheckpoint()`ed (1 row), so round i+1's pair count replays
-    * only cheap vocab-sized projections on top of the materialized
-    * vocab relation — the same O(1)-plan-depth discipline as the
-    * k-means and connected-components loops. */
+    * cut (1 row), so round i+1's pair count replays only cheap
+    * vocab-sized projections on top of the materialized vocab relation
+    * — the O(1)-plan-depth discipline of [[graft.Checkpointing.iterate]]
+    * (`SimilarityOps.lloydRounds`), hand-rolled here because the merge
+    * table unions EVERY round's winner: no cut is ever superseded. */
   private def bpeMergeTable(s: SparkSession, d: String): DataFrame =
     bpeCache.getOrBuild(s, d, docsMtime(d)) {
       var cur = bpeVocabRepr(s, d)
