@@ -43,14 +43,6 @@ object DedupOps {
 
   private[graft] def cacheKeys = bucketCache.keys
 
-  /** None on a failed stat — [[IndexCache.getOrBuild]] then reuses the
-    * live entry instead of evicting a healthy index over a transient
-    * filesystem error. */
-  private def docsMtime(d: String): Option[Long] =
-    try Some(java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(s"$d/documents.parquet")).toMillis)
-    catch { case _: java.io.IOException => None }
-
   /** One materialized (doc_id, comp) labeling per (session, dataset,
     * mtime) — shared by `dedup_components` and `dedup_split_assign`
     * so the label-propagation loop runs once per dataset. */
@@ -160,7 +152,7 @@ object DedupOps {
     * is persisted and eagerly materialized so the pair self-join scans
     * the cache on both sides rather than recomputing. */
   private def buckets(s: SparkSession, d: String): DataFrame =
-    bucketCache.getOrBuild(s, d, docsMtime(d)) {
+    bucketCache.getOrBuild(s, d, Tables.mtime(d, "documents")) {
       val bk = bucketRows(docs(s, d)).persist()
       bk.count() // materialize once, before any self-join runs
       bk
@@ -214,7 +206,7 @@ object DedupOps {
   private val hotCellCache = new IndexCache
 
   private[graft] def hotCells(s: SparkSession, d: String): DataFrame =
-    hotCellCache.getOrBuild(s, d, docsMtime(d)) {
+    hotCellCache.getOrBuild(s, d, Tables.mtime(d, "documents")) {
       buckets(s, d)
         .groupBy(col("band"), col("bucket"))
         .agg(count(lit(1)).as("occ"))
@@ -1124,7 +1116,7 @@ object DedupOps {
     * back as their own singletons) is cached per dataset and shared
     * with [[dedupSplitAssign]]. */
   private def components(s: SparkSession, d: String): DataFrame =
-    componentCache.getOrBuild(s, d, docsMtime(d)) {
+    componentCache.getOrBuild(s, d, Tables.mtime(d, "documents")) {
       val labels = propagateMinLabels(buckets(s, d))
       // isolated docs (no signature or lone bucket membership is fine
       // either way: never a candidate) are their own components.
@@ -1577,7 +1569,7 @@ object DedupOps {
   }
 
   private[graft] def mergedBuckets(s: SparkSession, d: String): DataFrame =
-    mergedCache.getOrBuild(s, d, docsMtime(d)) {
+    mergedCache.getOrBuild(s, d, Tables.mtime(d, "documents")) {
       val deltaBk = bucketRows(
         deltaBatch(s, d).select(col("doc_id"), col("text")))
         .transform(graft.Checkpointing.cut) // eager: materialize ONLY the appended rows
@@ -1665,7 +1657,7 @@ object DedupOps {
       .orderBy("doc_id", "band")
 
   private[graft] def rewrittenBuckets(s: SparkSession, d: String): DataFrame =
-    rewriteCache.getOrBuild(s, d, docsMtime(d)) {
+    rewriteCache.getOrBuild(s, d, Tables.mtime(d, "documents")) {
       buckets(s, d)
         .filter(!tombstoned(col("doc_id")))
         .select(col("doc_id"), col("band"), col("bucket"))

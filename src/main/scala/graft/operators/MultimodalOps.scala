@@ -256,11 +256,6 @@ object MultimodalOps {
     storeRewriteCache.invalidate()
   }
 
-  private def docsMtime(d: String): Option[Long] =
-    try Some(java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(s"$d/documents.parquet")).toMillis)
-    catch { case _: java.io.IOException => None }
-
   /** Per-payload ordered CDC chunk-digest array — one narrow
     * codegen'd pass (boundaries + slices + md5), shared by the
     * perceptual index and its verification scan. */
@@ -306,7 +301,8 @@ object MultimodalOps {
     * One checkpoint per context: the cache is context-keyed, so replay
     * clones can never materialize a private twin. */
   private[graft] def chunkStore(s: SparkSession, d: String): DataFrame =
-    chunkCache.getOrBuild(s, d, docsMtime(d)) {
+    chunkCache.getOrBuild(s, d,
+      graft.sources.Tables.mtime(d, "documents")) {
       chunkStoreRows(graft.sources.Tables.documents(s, d))
         .transform(graft.Checkpointing.cut) // eager: materialize once, cut the lineage
     }
@@ -359,7 +355,8 @@ object MultimodalOps {
       .orderBy("doc_id", "chunk_md5")
 
   private[graft] def mergedChunkStore(s: SparkSession, d: String): DataFrame =
-    chunkMergedCache.getOrBuild(s, d, docsMtime(d)) {
+    chunkMergedCache.getOrBuild(s, d,
+      graft.sources.Tables.mtime(d, "documents")) {
       val deltaRows = chunkStoreRows(
         DedupOps.deltaBatch(s, d).select(col("doc_id"), col("text")))
         .transform(graft.Checkpointing.cut) // eager: materialize ONLY the appended rows
@@ -432,7 +429,8 @@ object MultimodalOps {
 
   private[graft] def rewrittenChunkStore(s: SparkSession, d: String)
       : DataFrame =
-    storeRewriteCache.getOrBuild(s, d, docsMtime(d)) {
+    storeRewriteCache.getOrBuild(s, d,
+      graft.sources.Tables.mtime(d, "documents")) {
       chunkStore(s, d)
         .filter(!DedupOps.tombstoned(col("doc_id")))
         .groupBy(col("doc_id"), col("chunk_md5"))
@@ -448,7 +446,8 @@ object MultimodalOps {
     * perceptual fingerprint. Persisted and mtime-keyed so the pair
     * self-join scans the cache on both sides. */
   private def chunkIndex(s: SparkSession, d: String): DataFrame =
-    nearDupCache.getOrBuild(s, d, docsMtime(d)) {
+    nearDupCache.getOrBuild(s, d,
+      graft.sources.Tables.mtime(d, "documents")) {
       import graft.functions.Hashing
       val hashed = chunkMd5s(graft.sources.Tables.documents(s, d))
         .select(col("doc_id"),

@@ -71,14 +71,6 @@ object SimilarityOps {
 
   private[graft] def cacheKeys = indexCache.keys
 
-  /** None on a failed stat — [[IndexCache.getOrBuild]] then reuses the
-    * live entry instead of evicting a healthy index over a transient
-    * filesystem error. */
-  private def embMtime(d: String): Option[Long] =
-    try Some(java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(s"$d/embeddings.parquet")).toMillis)
-    catch { case _: java.io.IOException => None }
-
   /** Drop the persisted ANN index + trained-quantizer relations (e.g.
     * to release executor storage). */
   def invalidateIndexes(): Unit = {
@@ -92,7 +84,7 @@ object SimilarityOps {
   }
 
   private def bucketed(s: SparkSession, d: String): DataFrame =
-    indexCache.getOrBuild(s, d, embMtime(d)) {
+    indexCache.getOrBuild(s, d, Tables.mtime(d, "embeddings")) {
       val wb = emb(s, d)
         .select(col("vec_id"), col("embedding"), col("label"),
           bucketCol(col("embedding")).as("bucket"),
@@ -455,7 +447,7 @@ object SimilarityOps {
   private val embCompCache = new IndexCache
 
   private def embComponentsRel(s: SparkSession, d: String): DataFrame =
-    embCompCache.getOrBuild(s, d, embMtime(d)) {
+    embCompCache.getOrBuild(s, d, Tables.mtime(d, "embeddings")) {
       val pairs = embNearDupPairs(s, d).select(col("vec_a"), col("vec_b"))
       // bipartite encoding: pair i = a bucket holding exactly its two
       // endpoints; the synthetic bucket id (a << 32 | b) is unique per
@@ -917,7 +909,7 @@ object SimilarityOps {
     * (clabel, c ARRAY<DOUBLE>) from the decimal-exact per-(label, dim)
     * means. Tiny (|labels| rows) — always broadcast at the use site. */
   private def centroids(s: SparkSession, d: String): DataFrame =
-    labelCentCache.getOrBuild(s, d, embMtime(d)) {
+    labelCentCache.getOrBuild(s, d, Tables.mtime(d, "embeddings")) {
       val c = toArrays(meansLong(
         emb(s, d).select(col("label").cast("long").as("clabel"),
           col("embedding")))).persist()
@@ -1039,7 +1031,7 @@ object SimilarityOps {
     * means, eagerly materialized (the final round's cut IS the
     * materialization the cache holds). */
   private def trainedCentroids(s: SparkSession, d: String): DataFrame =
-    centroidCache.getOrBuild(s, d, embMtime(d)) {
+    centroidCache.getOrBuild(s, d, Tables.mtime(d, "embeddings")) {
       lloydRounds(s, d, centroids(s, d))
     }
 
@@ -1515,7 +1507,7 @@ object SimilarityOps {
     * dist), the argmin step shared by [[embPqEncode]] and the ADC
     * search ([[annPqAdc]]). */
   private def pqAssigned(s: SparkSession, d: String): DataFrame =
-    pqCache.getOrBuild(s, d, embMtime(d)) {
+    pqCache.getOrBuild(s, d, Tables.mtime(d, "embeddings")) {
       val subVecs = emb(s, d)
         .select(col("vec_id"),
           posexplode(array((0 until PqSubspaces).map(m =>
@@ -1958,7 +1950,7 @@ object SimilarityOps {
   }
 
   private[graft] def mergedAnnIndex(s: SparkSession, d: String): DataFrame =
-    annMergedCache.getOrBuild(s, d, embMtime(d)) {
+    annMergedCache.getOrBuild(s, d, Tables.mtime(d, "embeddings")) {
       val deltaRows = emb(s, d)
         .filter(graft.functions.Hashing.charHash(
           col("vec_id").cast("string")) % 10 === DedupOps.DeltaTag)
@@ -2059,7 +2051,7 @@ object SimilarityOps {
 
   private[graft] def rewrittenAnnIndex(s: SparkSession, d: String)
       : DataFrame =
-    annRewriteCache.getOrBuild(s, d, embMtime(d)) {
+    annRewriteCache.getOrBuild(s, d, Tables.mtime(d, "embeddings")) {
       bucketed(s, d)
         .filter(!DedupOps.tombstoned(col("vec_id")))
         .transform(graft.Checkpointing.cut) // eager: survivors materialized, lineage cut

@@ -2,19 +2,35 @@ package graft.operators
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.Exact._
 import graft.sources.Tables
 
 /** Structured Streaming exercised through the oracle gate: each query
-  * here REALLY runs a streaming query (readStream → transform →
-  * memory sink, `Trigger.AvailableNow`) over the events parquet, then
-  * returns the materialized result for the driver's DuckDB compare —
-  * proving the streaming path computes exactly what the equivalent
-  * batch SQL computes.
+  * here REALLY runs a finite streaming replay (`Trigger.AvailableNow`)
+  * over a table's parquet ([[tableStream]]), then returns the
+  * materialized result for the driver's DuckDB compare — proving the
+  * streaming path computes exactly what the equivalent batch SQL
+  * computes.
+  *
+  * Two engines run the replays:
+  *  - [[runToTable]]: the streaming plan itself (stateful operators,
+  *    watermarks, stream-static joins) into a memory sink, in the
+  *    output mode the plan needs; the result schema is the plan's;
+  *  - the `foreachBatch` harness, for per-batch logic a streaming plan
+  *    cannot express: [[drain]] is its one drain loop (the driver-fold
+  *    monitors and the topk/decayed ledgers call it directly), and
+  *    [[appendReplay]] runs a per-batch `DataFrame => DataFrame` for
+  *    the ingest gates, appending each batch's output and reading it
+  *    back with the schema analysed from that function over an empty
+  *    frame — no result schema is written by hand there. The two
+  *    ledger state schemas ([[TopkStateSchema]], [[DecayStateSchema]])
+  *    and `stream_vec_dedup`'s output stay explicit: their readers see
+  *    only a directory, which may hold no part file at all.
   *
   * Two aggregation modes are exercised:
   *  - complete mode where the batch oracle must see every group
@@ -72,15 +88,23 @@ object StreamOps {
     })
   }
 
-  /** readStream over `$d/$table.parquet` (file or directory shaped).
-    * `pathGlobFilter` keeps writer-metadata files (`_SUCCESS`, probe
-    * sentinels) out of the listing. */
-  private def tableStream(s: SparkSession, d: String, table: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    s.readStream.schema(schema)
+  /** readStream over `$d/$table.parquet` (file or directory shaped)
+    * with the batch loader's raw schema ([[Tables.load]], exactly what
+    * is in the parquet footer) and read fixups ([[Tables.decode]]: the
+    * `events.ts` rebuild). `pathGlobFilter` keeps writer-metadata
+    * files (`_SUCCESS`, probe sentinels) out of the listing. */
+  private def tableStream(s: SparkSession, d: String, table: String)
+      : DataFrame =
+    Tables.decode(table, s.readStream.schema(Tables.load(s, d, table).schema)
       .option("pathGlobFilter", "*.parquet")
       .option("maxFilesPerTrigger", MaxFilesPerTrigger.toString)
-      .parquet(streamSrcDir(d, table))
+      .parquet(streamSrcDir(d, table)))
+
+  /** The incoming side of the per-batch ingest gates: the documents
+    * stream cut to its [[SketchOps.isNew]] slice, as (doc_id, text). */
+  private def newDocs(s: SparkSession, d: String): DataFrame =
+    tableStream(s, d, "documents").filter(SketchOps.isNew(col("doc_id")))
+      .select(col("doc_id"), col("text"))
 
   /** Await a finite replay's drain, then REQUIRE that the source
     * actually delivered rows — UNLESS the source data is genuinely
@@ -126,23 +150,6 @@ object StreamOps {
         s"dirs=${srcDirs.mkString(", ")})")
   }
 
-  /** readStream over the events parquet with the same schema-dispatched
-    * timestamp rebuild as the batch loader ([[Tables.events]]): legacy
-    * nanos-as-BIGINT files get the integer-division micros rebuild,
-    * native TIMESTAMP files a plain cast. */
-  private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    // the RAW file schema (pre-conversion), so the stream reader sees
-    // exactly what is in the parquet footer
-    val raw = Tables.load(s, d, "events")
-    val stream = tableStream(s, d, "events", raw.schema)
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        stream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ =>
-        stream.withColumn("ts", col("ts").cast("timestamp"))
-    }
-  }
-
   /** Isolated session for a finite oracle replay: `newSession()`
     * clones the conf over the shared SparkContext, so lowering the
     * shuffle-partition count (= state stores allocated per stateful
@@ -161,31 +168,6 @@ object StreamOps {
     f.delete(); ()
   }
 
-  /** Collect a foreachBatch run's temp-dir parquet output, shared by
-    * every foreachBatch-engine query. Reads with the EXPLICIT schema —
-    * an all-filtered run writes no part files, and schema inference on
-    * the empty dir would throw instead of yielding the correct empty
-    * result — then materializes (eager localCheckpoint cuts lineage
-    * back to the files) and deletes the dir so no Verify/test/bench
-    * run leaks it. Listing uses `File.listFiles`: the previous inline
-    * copies used `Files.list`, whose backing directory handle was
-    * never closed — one leaked fd per streaming query. */
-  private def collectBatchOutput(s: SparkSession, outDir: String,
-      schema: org.apache.spark.sql.types.StructType, orderCol: String)
-      : DataFrame = {
-    val parts = Option(new java.io.File(outDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-    val hasParts = parts.exists(_.getName.endsWith(".parquet"))
-    val out =
-      if (!hasParts) s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      else s.read.schema(schema).parquet(outDir)
-        .orderBy(orderCol)
-        .transform(graft.Checkpointing.cut)
-    deleteRecursively(new java.io.File(outDir))
-    out
-  }
-
   private def runToTable(s: SparkSession, df: DataFrame, mode: String)
       : DataFrame = {
     val qn = s"graft_stream_${nameCounter.incrementAndGet()}"
@@ -195,10 +177,67 @@ object StreamOps {
     s.table(qn)
   }
 
+  /** The `foreachBatch` engine's one drain: replay `stream` to the end
+    * through `f` (`Trigger.AvailableNow`) and hold it to
+    * [[awaitDrained]]'s guard. */
+  private def drain(stream: DataFrame)(f: (DataFrame, Long) => Unit)
+      : Unit =
+    awaitDrained(stream.writeStream.trigger(Trigger.AvailableNow())
+      .foreachBatch(f).start())
+
+  /** Read the parquet parts appended to `dir` with an EXPLICIT schema,
+    * or return the empty relation of that schema when no part file was
+    * ever written: inference on an empty dir would throw
+    * (`UNABLE_TO_INFER_SCHEMA`) instead of yielding the correct empty
+    * result, and a readout must degrade to empty so the harness guard
+    * ([[awaitDrained]]) is what reports a real failure. Fields read as
+    * nullable on both paths, as the file reader reads them. Listing
+    * uses `File.listFiles`: `Files.list` leaks its directory handle. */
+  private def readParts(s: SparkSession, dir: String,
+      schema: StructType): DataFrame = {
+    val nullable = StructType(schema.map(_.copy(nullable = true)))
+    val parts = Option(new java.io.File(dir).listFiles())
+      .getOrElse(Array.empty[java.io.File])
+    if (parts.exists(_.getName.endsWith(".parquet")))
+      s.read.schema(nullable).parquet(dir)
+    else s.createDataFrame(new java.util.ArrayList[Row](), nullable)
+  }
+
+  /** [[readParts]] ordered by `orderCols`, materialized (the eager cut
+    * ends the lineage at the files), then the dir is deleted so no
+    * Verify/test/bench run leaks it. */
+  private def collectParts(s: SparkSession, dir: String, schema: StructType,
+      orderCols: String*): DataFrame = {
+    val out = readParts(s, dir, schema).orderBy(orderCols.map(col): _*)
+      .transform(graft.Checkpointing.cut)
+    deleteRecursively(new java.io.File(dir))
+    out
+  }
+
+  /** The append replay behind the per-batch ingest gates: each
+    * micro-batch's `perBatch` output is appended to a temp dir, and the
+    * drained result comes back ordered by `orderCol` ([[collectParts]]).
+    * The read schema is `perBatch` analysed over an empty frame of the
+    * stream's schema — analysis only, no job — so it is the schema the
+    * batches write, and an all-filtered run still returns the right
+    * empty relation. */
+  private def appendReplay(stream: DataFrame, orderCol: String)(
+      perBatch: DataFrame => DataFrame): DataFrame = {
+    val s = stream.sparkSession
+    val schema = perBatch(
+      s.createDataFrame(new java.util.ArrayList[Row](), stream.schema)).schema
+    val outDir = java.nio.file.Files
+      .createTempDirectory("graft-stream-out").toString
+    drain(stream) { (batch, _) =>
+      perBatch(batch).write.mode("append").parquet(outDir)
+    }
+    collectParts(s, outDir, schema, orderCol)
+  }
+
   /** Streaming hourly aggregate — must equal the batch `ev_hourly`. */
   val streamHourly: Q = (s0, d) => {
     val s = replaySession(s0)
-    val agg = eventsStream(s, d)
+    val agg = tableStream(s, d, "events")
       .groupBy(date_format(col("ts"), "yyyy-MM-dd HH:00:00").as("hour"),
         col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -213,7 +252,7 @@ object StreamOps {
     * emitted key set must equal batch DISTINCT. */
   val streamDedupKeys: Q = (s0, d) => {
     val s = replaySession(s0)
-    val dedup = eventsStream(s, d)
+    val dedup = tableStream(s, d, "events")
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
     runToTable(s, dedup, "append")
@@ -228,7 +267,7 @@ object StreamOps {
     * reproduces that exactly with epoch_ms). */
   val streamHourlyWm: Q = (s0, d) => {
     val s = replaySession(s0)
-    val agg = eventsStream(s, d)
+    val agg = tableStream(s, d, "events")
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(money(col("value"))).as("tv"))
@@ -247,7 +286,7 @@ object StreamOps {
     * source in StreamingWatermarkSpec. */
   val streamDedupWm: Q = (s0, d) => {
     val s = replaySession(s0)
-    val dedup = eventsStream(s, d)
+    val dedup = tableStream(s, d, "events")
       .select(col("user_id"), col("event_type"), col("ts"))
       .withWatermark("ts", "90 days")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
@@ -366,7 +405,7 @@ object StreamOps {
   val streamSessionize: Q = (s0, d) => {
     val s = replaySession(s0)
     import s.implicits._
-    val events = eventsStream(s, d)
+    val events = tableStream(s, d, "events")
       .withWatermark("ts", s"$SessionWmDelayMs milliseconds")
       .select(col("user_id"), col("event_id"),
         unix_timestamp(col("ts")).as("tsec"), col("ts"))
@@ -392,7 +431,7 @@ object StreamOps {
     * batch, not quadratic — the skew probe holds it at ~1×.) */
   val streamSessionWindow: Q = (s0, d) => {
     val s = replaySession(s0)
-    val agg = eventsStream(s, d)
+    val agg = tableStream(s, d, "events")
       .select(col("user_id"),
         timestamp_seconds(unix_timestamp(col("ts"))).as("tss"))
       .withWatermark("tss", "1 hour")
@@ -436,7 +475,7 @@ object StreamOps {
   val streamIntervalJoin: Q = (s0, d) => {
     val s = replaySession(s0)
     def side(tpe: String, prefix: String) =
-      eventsStream(s, d)
+      tableStream(s, d, "events")
         .filter(col("event_type") === tpe)
         .select(col("user_id").as(s"${prefix}_user"),
           col("event_id").as(s"${prefix}_id"),
@@ -488,7 +527,7 @@ object StreamOps {
   val streamConversionWindow: Q = (s0, d) => {
     val s = replaySession(s0)
     def side(tpe: String, prefix: String) =
-      eventsStream(s, d)
+      tableStream(s, d, "events")
         .filter(col("event_type") === tpe)
         .select(col("user_id").as(s"${prefix}_user"),
           col("event_id").as(s"${prefix}_id"),
@@ -527,7 +566,7 @@ object StreamOps {
   private[graft] val streamConversionWindowAlt: Q = (s0, d) => {
     val s = replaySession(s0)
     def side(tpe: String, prefix: String) =
-      eventsStream(s, d)
+      tableStream(s, d, "events")
         .filter(col("event_type") === tpe)
         .select(col("user_id").as(s"${prefix}_user"),
           col("event_id").as(s"${prefix}_id"),
@@ -570,7 +609,7 @@ object StreamOps {
       .select(col("c_custkey"), col("c_name"), col("n_name"))
       // pre-cut: publish the dim once, not once per micro-batch
       .transform(graft.Checkpointing.cut)
-    val enriched = eventsStream(s, d)
+    val enriched = tableStream(s, d, "events")
       .filter(col("event_type") === "purchase")
       .join(dim, col("user_id") === col("c_custkey"))
       .select(col("event_id"), col("user_id"), col("c_name"),
@@ -602,52 +641,32 @@ object StreamOps {
       .select(col("user_id"), expr("unix_timestamp(ts)").as("t"),
         lit(0L).as("kind"), lit(-1L).as("event_id"))
       .transform(graft.Checkpointing.cut) // publish the static side once
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-stream-asof").toString
     val ordered = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
       .orderBy(col("t"), col("kind"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    val q = eventsStream(s, d)
+    val clickStream = tableStream(s, d, "events")
       .filter(col("event_type") === "click")
       .select(col("event_id"), col("user_id"),
         unix_timestamp(col("ts")).as("t"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val clicks = batch.select(col("user_id"), col("t"),
-          lit(1L).as("kind"), col("event_id"))
-        val touched = views.join(
-          clicks.select(col("user_id")).distinct(),
-          Seq("user_id"), "left_semi")
-        touched.unionByName(clicks)
-          .withColumn("view_t",
-            last(when(col("kind") === 0L, col("t")), ignoreNulls = true)
-              .over(ordered))
-          .filter(col("kind") === 1L)
-          .select(col("event_id"), col("user_id"),
-            col("t").as("click_ts_sec"),
-            coalesce(col("view_t"), lit(-1L)).as("view_ts_sec"),
-            coalesce(col("t") - col("view_t"), lit(-1L)).as("gap_sec"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("user_id", LongType),
-      StructField("click_ts_sec", LongType),
-      StructField("view_ts_sec", LongType),
-      StructField("gap_sec", LongType)))
-    collectBatchOutput(s, outDir, schema, "event_id")
+    appendReplay(clickStream, "event_id") { batch =>
+      val clicks = batch.select(col("user_id"), col("t"),
+        lit(1L).as("kind"), col("event_id"))
+      val touched = views.join(
+        clicks.select(col("user_id")).distinct(),
+        Seq("user_id"), "left_semi")
+      touched.unionByName(clicks)
+        .withColumn("view_t",
+          last(when(col("kind") === 0L, col("t")), ignoreNulls = true)
+            .over(ordered))
+        .filter(col("kind") === 1L)
+        .select(col("event_id"), col("user_id"),
+          col("t").as("click_ts_sec"),
+          coalesce(col("view_t"), lit(-1L)).as("view_ts_sec"),
+          coalesce(col("t") - col("view_t"), lit(-1L)).as("gap_sec"))
+    }
   }
-
-  /** readStream over the documents parquet ([[tableStream]], file- or
-    * directory-shaped) — the corpus-ingest stream. */
-  private def docsStream(s: SparkSession, d: String): DataFrame =
-    tableStream(s, d, "documents", Tables.load(s, d, "documents").schema)
 
   /** Curation ON INGEST: the stateless [[TextOps.docKeepDecision]]
     * rules (min length, repetition — the corpus-wide exact-dup rule
@@ -667,7 +686,7 @@ object StreamOps {
     val dupRatio = when(nTok >= 3,
       (size(grams) - size(array_distinct(grams))).cast("double") /
         size(grams).cast("double")).otherwise(0.0)
-    val routed = docsStream(s, d)
+    val routed = tableStream(s, d, "documents")
       .select(col("doc_id"), nTok.as("n_tokens"), dupRatio.as("dup_ratio"))
       .select(col("doc_id"), col("n_tokens"), col("dup_ratio"),
         when(col("n_tokens") < TextOps.KeepMinTokens, "too_short")
@@ -691,7 +710,7 @@ object StreamOps {
     val s = replaySession(s0)
     def cnt(pat: String) =
       regexp_count(col("text"), lit(pat)).cast("long")
-    val gated = docsStream(s, d)
+    val gated = tableStream(s, d, "documents")
       .select(col("doc_id"),
         cnt(TextOps.PiiEmail).as("n_emails"),
         cnt(TextOps.PiiIpv4).as("n_ipv4"),
@@ -734,7 +753,7 @@ object StreamOps {
       .select(md5(col("text").cast("binary")).as("tomb_md5"))
       .distinct()
       .transform(graft.Checkpointing.cut)
-    val incoming = docsStream(s, d)
+    val incoming = tableStream(s, d, "documents")
       .filter(tagOf(col("doc_id")) === DedupOps.TombTag ||
         tagOf(col("doc_id")) === DedupOps.AddTag)
       .select((col("doc_id") + DedupOps.DeltaIdOffset).as("doc_id"),
@@ -775,7 +794,7 @@ object StreamOps {
       .withColumn("seen", lit(1L))
       // pre-cut: one gram-index build, not one per micro-batch
       .transform(graft.Checkpointing.cut)
-    val incoming = docsStream(s, d)
+    val incoming = tableStream(s, d, "documents")
       .filter(tagOf(col("doc_id")) === DedupOps.AddTag)
       .select((col("doc_id") + DedupOps.DeltaIdOffset).as("doc_id"),
         explode(grams(col("text"))).as("gh"))
@@ -809,25 +828,18 @@ object StreamOps {
     * session must not grow a cache entry per call). */
   val streamNeardupCandidates: Q = (s0, d) => {
     val s = replaySession(s0)
-    def isNew(id: Column) =
-      graft.functions.Hashing.charHash(id.cast("string")) % 10 === 7
     val corpusIdx = DedupOps.bucketRows(Tables.documents(s, d))
-      .filter(!isNew(col("doc_id")))
+      .filter(!SketchOps.isNew(col("doc_id")))
       .select(col("band"), col("bucket"), col("doc_id").as("cand_id"))
       // pre-cut: one bucket-index build, not one per micro-batch
       .transform(graft.Checkpointing.cut)
-    val incoming = DedupOps.bucketRows(docsStream(s, d))
-      .filter(isNew(col("doc_id")))
+    val incoming = DedupOps.bucketRows(tableStream(s, d, "documents"))
+      .filter(SketchOps.isNew(col("doc_id")))
     val hits = incoming.join(corpusIdx, Seq("band", "bucket"))
       .select(col("doc_id"), col("band"), col("bucket"), col("cand_id"))
     runToTable(s, hits, "append")
       .orderBy("doc_id", "band", "bucket", "cand_id")
   }
-
-  /** readStream over the embeddings parquet ([[tableStream]], file- or
-    * directory-shaped) — the vector-ingest stream. */
-  private def embStream(s: SparkSession, d: String): DataFrame =
-    tableStream(s, d, "embeddings", Tables.load(s, d, "embeddings").schema)
 
   /** Search-before-insert ON INGEST: each incoming vector's bucket +
     * norm (the same stateless [[SimilarityOps.probeRows]] projection
@@ -850,11 +862,9 @@ object StreamOps {
     * streaming side never buffers). */
   val streamAnnUpsert: Q = (s0, d) => {
     val s = replaySession(s0)
-    def isNew(id: Column) =
-      graft.functions.Hashing.charHash(id.cast("string")) % 10 === 7
-    val corpus = SimilarityOps.upsertCorpus(s, d, isNew)
-    val incoming = SimilarityOps.probeRows(embStream(s, d))
-      .filter(isNew(col("vec_id")))
+    val corpus = SimilarityOps.upsertCorpus(s, d, SketchOps.isNew)
+    val incoming = SimilarityOps.probeRows(tableStream(s, d, "embeddings"))
+      .filter(SketchOps.isNew(col("vec_id")))
     val cos = SimilarityOps.cosPre(
       col("qe"), col("ce"), col("qn"), col("cn"))
     val hits = incoming.join(corpus, Seq("bucket"))
@@ -898,29 +908,19 @@ object StreamOps {
     * (the MIN twin survives, ledger rows = distinct fingerprints). */
   val streamVecDedup: Q = (s0, d) => {
     val s = replaySession(s0)
-    def isNew(id: Column) =
-      graft.functions.Hashing.charHash(id.cast("string")) % 10 === 7
-    val corpus = SimilarityOps.upsertCorpus(s, d, isNew)
+    val corpus = SimilarityOps.upsertCorpus(s, d, SketchOps.isNew)
     val outDir = java.nio.file.Files
       .createTempDirectory("graft-vec-dedup").toString
     val ledgerDir = java.nio.file.Files
       .createTempDirectory("graft-vec-ledger").toString
-    val q = embStream(s, d)
-      .filter(isNew(col("vec_id")))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        vecDedupBatch(batch, corpus, ledgerDir, outDir)
-      }
-      .start()
-    awaitDrained(q)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cand_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cos", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("flag", org.apache.spark.sql.types.StringType)))
-    val out = collectBatchOutput(s, outDir, schema, "vec_id")
-      .orderBy("vec_id", "cand_id")
+    val incoming = tableStream(s, d, "embeddings")
+      .filter(SketchOps.isNew(col("vec_id")))
+    drain(incoming)((batch, _) =>
+      vecDedupBatch(batch, corpus, ledgerDir, outDir))
+    // explicit: vecDedupBatch writes its own two outputs
+    val out = collectParts(s, outDir, StructType.fromDDL(
+      "vec_id BIGINT, bucket BIGINT, cand_id BIGINT, cos DOUBLE, " +
+        "flag STRING"), "vec_id", "cand_id")
     deleteRecursively(new java.io.File(ledgerDir))
     out
   }
@@ -979,10 +979,8 @@ object StreamOps {
     * pair-level rollup stays `text_cdc_dedup`'s batch job. */
   val streamCdcCandidates: Q = (s0, d) => {
     val s = replaySession(s0)
-    def isNew(id: Column) =
-      graft.functions.Hashing.charHash(id.cast("string")) % 10 === 7
     val corpus = MultimodalOps.chunkStore(s, d)
-      .filter(!isNew(col("doc_id")))
+      .filter(!SketchOps.isNew(col("doc_id")))
       .select(col("doc_id").as("cand_id"), col("chunk_md5"))
       .distinct()
     val rare = corpus.groupBy("chunk_md5")
@@ -992,8 +990,8 @@ object StreamOps {
     val eligible = corpus.join(rare, Seq("chunk_md5"), "left_semi")
       // pre-cut: one df-cap semi-join, not one per micro-batch
       .transform(graft.Checkpointing.cut)
-    val incoming = MultimodalOps.chunkDigestRows(docsStream(s, d))
-      .filter(isNew(col("doc_id")))
+    val incoming = MultimodalOps.chunkDigestRows(tableStream(s, d, "documents"))
+      .filter(SketchOps.isNew(col("doc_id")))
     val hits = incoming.join(eligible, Seq("chunk_md5"))
       .select(col("doc_id"), col("chunk_md5"), col("cand_id"))
     runToTable(s, hits, "append")
@@ -1020,55 +1018,20 @@ object StreamOps {
     * relation, re-planned per micro-batch like the other gates. */
   val streamCdcStrip: Q = (s0, d) => {
     val s = replaySession(s0)
-    def isNew(id: Column) =
-      graft.functions.Hashing.charHash(id.cast("string")) % 10 === 7
     // corpus-owned digests (df-capped): owner -1 = "the corpus", so
     // every incoming copy of a corpus chunk is stripped
     val corpusOwned = MultimodalOps.chunkStore(s, d)
-      .filter(!isNew(col("doc_id")))
+      .filter(!SketchOps.isNew(col("doc_id")))
       .groupBy(col("chunk_md5"))
       .agg(countDistinct(col("doc_id")).as("dfd"))
       .filter(col("dfd") <= DedupOps.MaxChunkDf)
       .select(col("chunk_md5"), lit(-1L).as("owner"))
       // pre-cut: one df-cap rollup, not one per micro-batch
       .transform(graft.Checkpointing.cut)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-cdc-strip").toString
-    val q = docsStream(s, d)
-      .filter(isNew(col("doc_id")))
-      .select(col("doc_id"), col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        DedupOps.cdcStripAgainst(batch, corpusOwned)
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
-    awaitDrained(q)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_chunks", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_kept", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("clean_text", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("clean_len", org.apache.spark.sql.types.LongType)))
-    collectBatchOutput(s, outDir, schema, "doc_id")
+    appendReplay(newDocs(s, d), "doc_id")(
+      DedupOps.cdcStripAgainst(_, corpusOwned))
   }
 
-  /** Unigram-frequency quality gate ON INGEST — the streaming mirror
-    * of `doc_unigram_score`'s filtering role: each incoming (is_new)
-    * document is scored against the CORPUS token-frequency relation
-    * (the static side — in production, yesterday's published count
-    * table) and routed admitted / quarantined by its OOV fraction:
-    * more than 25% never-seen tokens marks OCR soup, encoding junk,
-    * or an unknown language the batch tiers would waste work on (E6
-    * classify-and-route at the gate, like the other ingest gates).
-    * All accounting integer: n_oov·4 > n_tokens is the threshold, no
-    * division.
-    *
-    * Execution shape: `foreachBatch` + the batch scoring engine — the
-    * per-doc rollup groups only WITHIN the micro-batch each doc
-    * arrives in (docs arrive whole), so zero streaming state store,
-    * no watermark; cross-batch memory is strictly the static count
-    * relation, re-planned per micro-batch like every other gate. */
   /** STRATIFIED streaming weighted reservoir — the per-language form
     * of `stream_sample_weighted`, mirroring
     * [[TextOps.docSampleWeightedQuota]] exactly: within each
@@ -1089,31 +1052,27 @@ object StreamOps {
       r => (r._1, r._2))
     val merged = scala.collection.mutable.Map
       .empty[String, scala.collection.mutable.SortedSet[(Double, Long, String, Long)]]
-    val q = docsStream(s, d)
+    val docs = tableStream(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("lang"))
-          .orderBy(col("priority"), col("doc_id"))
-        val rows = TextOps.weightedPriority(batch)
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= k)
-          .collect()
-          .map(r => (r.getAs[Double]("priority"), r.getAs[Long]("doc_id"),
-            r.getAs[String]("lang"), r.getAs[Long]("weight")))
-        merged.synchronized {
-          rows.foreach { r =>
-            val set = merged.getOrElseUpdate(r._3,
-              scala.collection.mutable.SortedSet.empty(ord))
-            set.add(r)
-            while (set.size > k) set.remove(set.last)
-          }
+    drain(docs) { (batch, _) =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("lang"))
+        .orderBy(col("priority"), col("doc_id"))
+      val rows = TextOps.weightedPriority(batch)
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= k)
+        .collect()
+        .map(r => (r.getAs[Double]("priority"), r.getAs[Long]("doc_id"),
+          r.getAs[String]("lang"), r.getAs[Long]("weight")))
+      merged.synchronized {
+        rows.foreach { r =>
+          val set = merged.getOrElseUpdate(r._3,
+            scala.collection.mutable.SortedSet.empty(ord))
+          set.add(r)
+          while (set.size > k) set.remove(set.last)
         }
-        ()
       }
-      .start()
-    awaitDrained(q)
+    }
     import s.implicits._
     merged.toSeq.flatMap { case (_, set) =>
       set.toSeq.zipWithIndex.map { case ((p, id, lg, wt), i) =>
@@ -1142,95 +1101,66 @@ object StreamOps {
     * (the CDC/exact gates own those). */
   val streamTemplateGate: Q = (s0, d) => {
     val s = replaySession(s0)
-    def isNew(id: Column) =
-      graft.functions.Hashing.charHash(id.cast("string")) % 10 === 7
     val heavy = SketchOps.heavyGramsOf(
-        Tables.documents(s, d).filter(!isNew(col("doc_id"))))
+        Tables.documents(s, d).filter(!SketchOps.isNew(col("doc_id"))))
       .transform(graft.Checkpointing.cut)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-template-gate").toString
-    val q = docsStream(s, d)
-      .filter(isNew(col("doc_id")))
-      .select(col("doc_id"), col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val dg = batch
-          .withColumn("toks", graft.functions.Hashing.tokens(col("text")))
-          .filter(size(col("toks")) >= 3)
-          .select(col("doc_id"),
-            explode(graft.functions.Hashing.shingles(col("toks")))
-              .as("g"))
-        dg.join(broadcast(heavy.withColumn("hit", lit(1L))),
-            Seq("g"), "left")
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_grams"),
-            sum(coalesce(col("hit"), lit(0L))).as("n_heavy"))
-          .select(col("doc_id"), col("n_grams"), col("n_heavy"),
-            when(col("n_heavy") * 2L > col("n_grams"),
-              "quarantined_template").otherwise("admitted")
-              .as("decision"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_grams",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_heavy",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("decision",
-        org.apache.spark.sql.types.StringType)))
-    collectBatchOutput(s, outDir, schema, "doc_id")
+    appendReplay(newDocs(s, d), "doc_id") { batch =>
+      val dg = batch
+        .withColumn("toks", graft.functions.Hashing.tokens(col("text")))
+        .filter(size(col("toks")) >= 3)
+        .select(col("doc_id"),
+          explode(graft.functions.Hashing.shingles(col("toks"))).as("g"))
+      dg.join(broadcast(heavy.withColumn("hit", lit(1L))), Seq("g"), "left")
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_grams"),
+          sum(coalesce(col("hit"), lit(0L))).as("n_heavy"))
+        .select(col("doc_id"), col("n_grams"), col("n_heavy"),
+          when(col("n_heavy") * 2L > col("n_grams"),
+            "quarantined_template").otherwise("admitted").as("decision"))
+    }
   }
 
+  /** Unigram-frequency quality gate ON INGEST — the streaming mirror
+    * of `doc_unigram_score`'s filtering role: each incoming (is_new)
+    * document is scored against the CORPUS token-frequency relation
+    * (the static side — in production, yesterday's published count
+    * table) and routed admitted / quarantined by its OOV fraction:
+    * more than 25% never-seen tokens marks OCR soup, encoding junk,
+    * or an unknown language the batch tiers would waste work on (E6
+    * classify-and-route at the gate, like the other ingest gates).
+    * All accounting integer: n_oov·4 > n_tokens is the threshold, no
+    * division.
+    *
+    * Execution shape: `foreachBatch` + the batch scoring engine — the
+    * per-doc rollup groups only WITHIN the micro-batch each doc
+    * arrives in (docs arrive whole), so zero streaming state store,
+    * no watermark; cross-batch memory is strictly the static count
+    * relation, re-planned per micro-batch like every other gate. */
   val streamUnigramGate: Q = (s0, d) => {
     val s = replaySession(s0)
-    def isNew(id: Column) =
-      graft.functions.Hashing.charHash(id.cast("string")) % 10 === 7
     // pre-cut: round 11 left this lazy, and the stream re-ran the
     // full corpus explode+groupBy inside the per-batch join (a 2.6x
     // regression isolated); the template gate's `heavy` cut is the
     // discipline, applied here
     val corpusTf = Tables.documents(s, d)
-      .filter(!isNew(col("doc_id")))
+      .filter(!SketchOps.isNew(col("doc_id")))
       .select(explode(graft.functions.Hashing.tokens(col("text")))
         .as("token"))
       .groupBy("token").agg(count(lit(1)).as("tf"))
       .transform(graft.Checkpointing.cut)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-unigram-gate").toString
-    val q = docsStream(s, d)
-      .filter(isNew(col("doc_id")))
-      .select(col("doc_id"), col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val dt = batch.select(col("doc_id"),
-          explode(graft.functions.Hashing.tokens(col("text")))
-            .as("token"))
-        dt.join(corpusTf, Seq("token"), "left")
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_tokens"),
-            sum(when(col("tf").isNull, 1L).otherwise(0L)).as("n_oov"),
-            min(col("tf")).as("mkt"))
-          .select(col("doc_id"), col("n_tokens"), col("n_oov"),
-            coalesce(col("mkt"), lit(0L)).as("min_known_tf"),
-            when(col("n_oov") * 4 > col("n_tokens"), "quarantined_oov")
-              .otherwise("admitted").as("decision"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_tokens", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_oov", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("min_known_tf", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("decision", org.apache.spark.sql.types.StringType)))
-    collectBatchOutput(s, outDir, schema, "doc_id")
+    appendReplay(newDocs(s, d), "doc_id") { batch =>
+      batch.select(col("doc_id"),
+          explode(graft.functions.Hashing.tokens(col("text"))).as("token"))
+        .join(corpusTf, Seq("token"), "left")
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_tokens"),
+          sum(when(col("tf").isNull, 1L).otherwise(0L)).as("n_oov"),
+          min(col("tf")).as("mkt"))
+        .select(col("doc_id"), col("n_tokens"), col("n_oov"),
+          coalesce(col("mkt"), lit(0L)).as("min_known_tf"),
+          when(col("n_oov") * 4 > col("n_tokens"), "quarantined_oov")
+            .otherwise("admitted").as("decision"))
+    }
   }
 
   /** Streaming mirror of [[TextOps.docTargetAffinity]]'s FILTERING
@@ -1247,41 +1177,23 @@ object StreamOps {
     * counter on either engine). */
   val streamAffinityGate: Q = (s0, d) => {
     val s = replaySession(s0)
-    def isNew(id: Column) =
-      graft.functions.Hashing.charHash(id.cast("string")) % 10 === 7
     // feature extraction, model fit and counters are THE batch
     // implementations ([[TextOps.affinityFeats]]/[[TextOps.affinityModel]]/
     // [[TextOps.affinityCounters]]) — the ingest gate cannot drift from
     // the batch scorer
     val model = TextOps.affinityModel(TextOps.affinityFeats(
-      Tables.documents(s, d).filter(!isNew(col("doc_id"))), col("lang")))
+      Tables.documents(s, d).filter(!SketchOps.isNew(col("doc_id"))),
+      col("lang")))
       // pre-cut: one model fit, not one per micro-batch
       .transform(graft.Checkpointing.cut)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-affinity-gate").toString
-    val q = docsStream(s, d)
-      .filter(isNew(col("doc_id")))
-      .select(col("doc_id"), col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        TextOps.affinityCounters(
-            TextOps.affinityFeats(batch, col("doc_id")), model, "left",
-            Seq("doc_id"))
-          .select(col("doc_id"), col("n_feat"), col("n_pos"), col("n_neg"),
-            when(col("n_neg") > col("n_pos"), "quarantined_offtarget")
-              .otherwise("admitted").as("decision"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_feat", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_pos", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_neg", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("decision", org.apache.spark.sql.types.StringType)))
-    collectBatchOutput(s, outDir, schema, "doc_id")
+    appendReplay(newDocs(s, d), "doc_id") { batch =>
+      TextOps.affinityCounters(
+          TextOps.affinityFeats(batch, col("doc_id")), model, "left",
+          Seq("doc_id"))
+        .select(col("doc_id"), col("n_feat"), col("n_pos"), col("n_neg"),
+          when(col("n_neg") > col("n_pos"), "quarantined_offtarget")
+            .otherwise("admitted").as("decision"))
+    }
   }
 
   /** Streaming mergeable histogram — the stream-side PROOF of
@@ -1295,7 +1207,7 @@ object StreamOps {
     * demonstrated in the execution model that needs it. */
   val streamHistogram: Q = (s0, d) => {
     val s = replaySession(s0)
-    val bins = eventsStream(s, d)
+    val bins = tableStream(s, d, "events")
       .filter(col("value").isNotNull)
       .groupBy(floor(col("value") / 10.0).cast("long").as("bin"))
       .agg(count(lit(1)).as("n"))
@@ -1322,38 +1234,19 @@ object StreamOps {
   val streamBloomGate: Q = (s0, d) => {
     val s = replaySession(s0)
     val bloom = SketchOps.bloomPositions(s, d)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-bloom-gate").toString
-    val q = docsStream(s, d)
-      .filter(SketchOps.isNew(col("doc_id")))
-      .select(col("doc_id"), col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch
-          .select(col("doc_id"),
-            explode(SketchOps.posArray(
-              graft.functions.Hashing.charHash(col("text")),
-              SketchOps.BloomBits, SketchOps.BloomK)).as("pos"))
-          .join(broadcast(bloom), Seq("pos"), "left")
-          .groupBy("doc_id")
-          .agg(sum(coalesce(col("hit"), lit(0L))).as("n_pos_hit"))
-          .select(col("doc_id"), col("n_pos_hit"),
-            when(col("n_pos_hit") === SketchOps.BloomK,
-              "route_exact_tier")
-              .otherwise("admitted_new").as("decision"))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    awaitDrained(q)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_pos_hit",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("decision",
-        org.apache.spark.sql.types.StringType)))
-    collectBatchOutput(s, outDir, schema, "doc_id")
+    appendReplay(newDocs(s, d), "doc_id") { batch =>
+      batch
+        .select(col("doc_id"),
+          explode(SketchOps.posArray(
+            graft.functions.Hashing.charHash(col("text")),
+            SketchOps.BloomBits, SketchOps.BloomK)).as("pos"))
+        .join(broadcast(bloom), Seq("pos"), "left")
+        .groupBy("doc_id")
+        .agg(sum(coalesce(col("hit"), lit(0L))).as("n_pos_hit"))
+        .select(col("doc_id"), col("n_pos_hit"),
+          when(col("n_pos_hit") === SketchOps.BloomK, "route_exact_tier")
+            .otherwise("admitted_new").as("decision"))
+    }
   }
 
   /** Streaming Count-Min monitor — the ADDITIVE sibling of
@@ -1379,24 +1272,19 @@ object StreamOps {
     // so the fold tracks applied batch ids — the production pattern
     // for any additive sink.
     val applied = scala.collection.mutable.Set.empty[Long]
-    val q = docsStream(s, d)
-      .select(col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cells = SketchOps.cmsMatrix(batch).collect()
-        merged.synchronized {
-          if (applied.add(batchId)) {
-            cells.foreach { r =>
-              val row = r.getAs[Int]("row")
-              val bucket = r.getAs[Long]("bucket").toInt
-              merged(row * width + bucket) += r.getAs[Long]("cnt")
-            }
+    val docs = tableStream(s, d, "documents").select(col("text"))
+    drain(docs) { (batch, batchId) =>
+      val cells = SketchOps.cmsMatrix(batch).collect()
+      merged.synchronized {
+        if (applied.add(batchId)) {
+          cells.foreach { r =>
+            val row = r.getAs[Int]("row")
+            val bucket = r.getAs[Long]("bucket").toInt
+            merged(row * width + bucket) += r.getAs[Long]("cnt")
           }
         }
-        ()
       }
-      .start()
-    awaitDrained(q)
+    }
     import s.implicits._
     merged.toIndexedSeq.zipWithIndex
       .collect { case (cnt, i) if cnt > 0L =>
@@ -1425,22 +1313,17 @@ object StreamOps {
   val streamHllMonitor: Q = (s0, d) => {
     val s = replaySession(s0)
     val merged = new Array[Long](SketchOps.HllRegisters.toInt)
-    val q = docsStream(s, d)
-      .select(col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val regs = SketchOps.hllRegs(batch).collect()
-        merged.synchronized {
-          regs.foreach { r =>
-            val reg = r.getAs[Long]("reg").toInt
-            val rho = r.getAs[Long]("rho")
-            if (rho > merged(reg)) merged(reg) = rho
-          }
+    val docs = tableStream(s, d, "documents").select(col("text"))
+    drain(docs) { (batch, _) =>
+      val regs = SketchOps.hllRegs(batch).collect()
+      merged.synchronized {
+        regs.foreach { r =>
+          val reg = r.getAs[Long]("reg").toInt
+          val rho = r.getAs[Long]("rho")
+          if (rho > merged(reg)) merged(reg) = rho
         }
-        ()
       }
-      .start()
-    awaitDrained(q)
+    }
     import s.implicits._
     val regDf = merged.toIndexedSeq.zipWithIndex
       .collect { case (rho, reg) if rho > 0L => (reg.toLong, rho) }
@@ -1466,21 +1349,16 @@ object StreamOps {
   val streamKmvMonitor: Q = (s0, d) => {
     val s = replaySession(s0)
     val merged = scala.collection.mutable.SortedSet.empty[Long]
-    val q = docsStream(s, d)
-      .select(col("text"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val mins = SketchOps.kmvSample(SketchOps.shingleHashes(batch))
-          .collect().map(_.getLong(0))
-        merged.synchronized {
-          mins.foreach(merged.add)
-          while (merged.size > SketchOps.KmvK)
-            merged.remove(merged.last)
-        }
-        ()
+    val docs = tableStream(s, d, "documents").select(col("text"))
+    drain(docs) { (batch, _) =>
+      val mins = SketchOps.kmvSample(SketchOps.shingleHashes(batch))
+        .collect().map(_.getLong(0))
+      merged.synchronized {
+        mins.foreach(merged.add)
+        while (merged.size > SketchOps.KmvK)
+          merged.remove(merged.last)
       }
-      .start()
-    awaitDrained(q)
+    }
     import s.implicits._
     SketchOps.kmvSummary(merged.toSeq.toDF("h"))
   }
@@ -1510,23 +1388,19 @@ object StreamOps {
       r => (r._1, r._2))
     val merged =
       scala.collection.mutable.SortedSet.empty[(Double, Long, String, Long)](ord)
-    val q = docsStream(s, d)
+    val docs = tableStream(s, d, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = TextOps.weightedPriority(batch)
-          .orderBy(col("priority"), col("doc_id")).limit(k)
-          .collect()
-          .map(r => (r.getAs[Double]("priority"), r.getAs[Long]("doc_id"),
-            r.getAs[String]("lang"), r.getAs[Long]("weight")))
-        merged.synchronized {
-          rows.foreach(merged.add)
-          while (merged.size > k) merged.remove(merged.last)
-        }
-        ()
+    drain(docs) { (batch, _) =>
+      val rows = TextOps.weightedPriority(batch)
+        .orderBy(col("priority"), col("doc_id")).limit(k)
+        .collect()
+        .map(r => (r.getAs[Double]("priority"), r.getAs[Long]("doc_id"),
+          r.getAs[String]("lang"), r.getAs[Long]("weight")))
+      merged.synchronized {
+        rows.foreach(merged.add)
+        while (merged.size > k) merged.remove(merged.last)
       }
-      .start()
-    awaitDrained(q)
+    }
     import s.implicits._
     merged.toSeq.map { case (p, id, lang, w) => (id, lang, w, p) }
       .toDF("doc_id", "lang", "weight", "priority")
@@ -1536,34 +1410,10 @@ object StreamOps {
   /** Group size of the streamed top-k ledger. */
   val StreamTopkK = 3L
 
-  /** Read a parquet ledger with its EXPLICIT schema, falling back to
-    * the correct empty relation when no batch ever appended a part
-    * file — the [[collectBatchOutput]] discipline applied to the
-    * state-dir readouts. Round 11's topk readout inferred instead and
-    * crashed (`UNABLE_TO_INFER_SCHEMA`) the moment the source bug
-    * delivered an empty stream; a readout must degrade to empty, not
-    * throw, so the harness assertion ([[awaitDrained]]) is what
-    * reports the real failure. */
-  private[graft] def readLedger(s: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val parts = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-    if (!parts.exists(_.getName.endsWith(".parquet")))
-      s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    else s.read.schema(schema).parquet(dir)
-  }
-
   /** State schema of [[topkValueBatch]]'s ledger: `sum(DECIMAL(12,2))`
     * widens to DECIMAL(22,2). */
-  private[graft] val TopkStateSchema =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("tv",
-        org.apache.spark.sql.types.DecimalType(22, 2))))
+  private[graft] val TopkStateSchema = StructType.fromDDL(
+    "event_type STRING, user_id BIGINT, tv DECIMAL(22,2)")
 
   /** One micro-batch of the streaming top-k ledger (the testable
     * engine behind [[streamTopkValue]]): the batch's per-(type, user)
@@ -1594,13 +1444,9 @@ object StreamOps {
     val s = replaySession(s0)
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft-topk-state").toString
-    val q = eventsStream(s, d)
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        topkValueBatch(batch, stateDir)
-      }
-      .start()
-    awaitDrained(q)
+    drain(tableStream(s, d, "events")) { (batch, _) =>
+      topkValueBatch(batch, stateDir)
+    }
     val out = topkValueReadout(s, stateDir)
       .transform(graft.Checkpointing.cut)
     deleteRecursively(new java.io.File(stateDir))
@@ -1609,7 +1455,7 @@ object StreamOps {
 
   /** Ledger compaction for [[streamTopkValue]]: merge the per-batch
     * decimal partials, rank per type. Explicit-schema readout
-    * ([[readLedger]]) — an untouched state dir compacts to the
+    * ([[readParts]]) — an untouched state dir compacts to the
     * correct EMPTY ranking. Split out so the spec can drive manual
     * micro-batches (and the empty case) through the same readout. */
   private[graft] def topkValueReadout(s: SparkSession, stateDir: String)
@@ -1617,7 +1463,7 @@ object StreamOps {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type"))
       .orderBy(col("tv").desc, col("user_id"))
-    readLedger(s, stateDir, TopkStateSchema)
+    readParts(s, stateDir, TopkStateSchema)
       .groupBy(col("event_type"), col("user_id"))
       .agg(sum(col("tv")).as("tv"))
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -1642,7 +1488,7 @@ object StreamOps {
       : String = {
     val compactDir = java.nio.file.Files
       .createTempDirectory("graft-topk-compact").toString
-    readLedger(s, stateDir, TopkStateSchema)
+    readParts(s, stateDir, TopkStateSchema)
       .groupBy(col("event_type"), col("user_id"))
       .agg(sum(col("tv")).cast(
         org.apache.spark.sql.types.DecimalType(22, 2)).as("tv"))
@@ -1664,13 +1510,9 @@ object StreamOps {
     val s = replaySession(s0)
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft-topk-state2").toString
-    val q = eventsStream(s, d)
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        topkValueBatch(batch, stateDir)
-      }
-      .start()
-    awaitDrained(q)
+    drain(tableStream(s, d, "events")) { (batch, _) =>
+      topkValueBatch(batch, stateDir)
+    }
     val compactDir = compactTopkLedger(s, stateDir)
     val out = topkValueReadout(s, compactDir)
       .transform(graft.Checkpointing.cut)
@@ -1694,16 +1536,8 @@ object StreamOps {
       .write.mode("append").parquet(stateDir)
 
   /** State schema of [[decayedValueBatch]]'s ledger. */
-  private[graft] val DecayStateSchema =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("day",
-        org.apache.spark.sql.types.DateType),
-      org.apache.spark.sql.types.StructField("cents",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n",
-        org.apache.spark.sql.types.LongType)))
+  private[graft] val DecayStateSchema = StructType.fromDDL(
+    "user_id BIGINT, day DATE, cents BIGINT, n BIGINT")
 
   /** Ledger compaction for [[streamDecayedValue]]: merge per-(user,
     * day) partials, shift each day's cents by its age in half-lives
@@ -1717,7 +1551,7 @@ object StreamOps {
     * cents. */
   private[graft] def decayedValueReadout(s: SparkSession,
       stateDir: String): DataFrame = {
-    val led = readLedger(s, stateDir, DecayStateSchema)
+    val led = readParts(s, stateDir, DecayStateSchema)
       .groupBy(col("user_id"), col("day"))
       .agg(sum(col("cents")).as("cents"), sum(col("n")).as("n"))
     val maxd = led.agg(max(col("day")).as("maxd"))
@@ -1749,7 +1583,7 @@ object StreamOps {
       : String = {
     val compactDir = java.nio.file.Files
       .createTempDirectory("graft-decay-compact").toString
-    readLedger(s, stateDir, DecayStateSchema)
+    readParts(s, stateDir, DecayStateSchema)
       .groupBy(col("user_id"), col("day"))
       .agg(sum(col("cents")).as("cents"), sum(col("n")).as("n"))
       .write.mode("overwrite").parquet(compactDir)
@@ -1768,13 +1602,9 @@ object StreamOps {
     val s = replaySession(s0)
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft-decay-state2").toString
-    val q = eventsStream(s, d)
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        decayedValueBatch(batch, stateDir)
-      }
-      .start()
-    awaitDrained(q)
+    drain(tableStream(s, d, "events")) { (batch, _) =>
+      decayedValueBatch(batch, stateDir)
+    }
     val compactDir = compactDecayLedger(s, stateDir)
     val out = decayedValueReadout(s, compactDir)
       .transform(graft.Checkpointing.cut)
@@ -1800,13 +1630,9 @@ object StreamOps {
     val s = replaySession(s0)
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft-decay-state").toString
-    val q = eventsStream(s, d)
-      .writeStream.trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        decayedValueBatch(batch, stateDir)
-      }
-      .start()
-    awaitDrained(q)
+    drain(tableStream(s, d, "events")) { (batch, _) =>
+      decayedValueBatch(batch, stateDir)
+    }
     val out = decayedValueReadout(s, stateDir)
       .transform(graft.Checkpointing.cut)
     deleteRecursively(new java.io.File(stateDir))

@@ -1786,11 +1786,6 @@ object TextOps {
     * exact same rounds as a CTE chain, like [[SimilarityOps.KmeansIters]]. */
   val BpeMerges = 8
 
-  private def docsMtime(d: String): Option[Long] =
-    try Some(java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(s"$d/documents.parquet")).toMillis)
-    catch { case _: java.io.IOException => None }
-
   /** The word-frequency relation BPE trains on. This is the classic
     * trainer shape (Sennrich et al.'s reference implementation counts
     * words once, then learns merges over the vocab table): the corpus
@@ -1849,7 +1844,7 @@ object TextOps {
   private val bpeVocabCache = new IndexCache
 
   private def bpeVocabRepr(s: SparkSession, d: String): DataFrame =
-    bpeVocabCache.getOrBuild(s, d, docsMtime(d)) {
+    bpeVocabCache.getOrBuild(s, d, Tables.mtime(d, "documents")) {
       bpeVocab(s, d)
         .withColumn("repr", bpeCharRepr(col("word")))
         .transform(graft.Checkpointing.cut)
@@ -1871,7 +1866,7 @@ object TextOps {
     * (`SimilarityOps.lloydRounds`), hand-rolled here because the merge
     * table unions EVERY round's winner: no cut is ever superseded. */
   private def bpeMergeTable(s: SparkSession, d: String): DataFrame =
-    bpeCache.getOrBuild(s, d, docsMtime(d)) {
+    bpeCache.getOrBuild(s, d, Tables.mtime(d, "documents")) {
       var cur = bpeVocabRepr(s, d)
       var merges: DataFrame = null
       for (i <- 1 to BpeMerges) {

@@ -28,7 +28,20 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
-  /** `events.ts` has shipped in two encodings across testdata
+  /** Modification time of `$d/$table.parquet` in ms, the key the
+    * per-dataset index caches rebuild on. None on a failed stat —
+    * [[graft.operators.IndexCache.getOrBuild]] then reuses the live
+    * entry instead of evicting a healthy index over a transient
+    * filesystem error. */
+  def mtime(d: String, table: String): Option[Long] =
+    try Some(java.nio.file.Files.getLastModifiedTime(
+      java.nio.file.Paths.get(s"$d/$table.parquet")).toMillis)
+    catch { case _: java.io.IOException => None }
+
+  /** The read fixups a table needs on top of its raw parquet schema,
+    * shared by the batch loaders and the streaming replays
+    * ([[graft.operators.StreamOps]]). Only `events` has one:
+    * `events.ts` has shipped in two encodings across testdata
     * generations, so dispatch on the read schema rather than assuming:
     *
     *  - TIMESTAMP(NANOS) in-file — Spark's parquet reader rejects it
@@ -41,15 +54,17 @@ object Tables {
     *    Timestamp with int96/ltz metadata); just cast to the session
     *    TimestampType. The session timezone is pinned to UTC, so the
     *    NTZ→LTZ cast is an identity on the underlying micros. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val raw = load(s, d, "events")
-    raw.schema("ts").dataType match {
+  def decode(table: String, raw: DataFrame): DataFrame =
+    if (table != "events") raw
+    else raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case _ =>
         raw.withColumn("ts", col("ts").cast("timestamp"))
     }
-  }
+
+  def events(s: SparkSession, d: String): DataFrame =
+    decode("events", load(s, d, "events"))
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

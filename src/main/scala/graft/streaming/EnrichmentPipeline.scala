@@ -19,12 +19,25 @@ import graft.streaming.Reliability._
   *    [[Reliability.fallible]] when a failure-injecting service is
   *    plugged in (tests mirror Services.scala:100-121)
   *  - E6 DLQ → per-batch split, both sinks written in the same
-  *    `foreachBatch` (atomic with the offset commit)
+  *    `foreachBatch` (atomic with the offset commit) from ONE
+  *    evaluation of the batch: it is persisted before the split, so
+  *    the fallible service runs once per row and the ok and DLQ sinks
+  *    read the same outcome. Evaluating it once per sink instead lets
+  *    a service whose calls disagree (fails, then succeeds) place a row
+  *    in neither sink, or in both — a lost or duplicated message
+  *    behind an acked batch
   *  - K3 ack → checkpoint commit after the batch's writes succeed;
   *    crash before commit ⇒ replay ⇒ at-least-once, exactly the
   *    README.md:13-17 contract
   *  - E3/E4 retry → [[Reliability.retry]] around the sink writes
-  *    (temporary infra failures), batch replay for anything worse.
+  *    (temporary infra failures), batch replay for anything worse; a
+  *    retried write re-reads the persisted batch and calls the
+  *    service no more times.
+  *
+  * DLQ rule: a failed service call dead-letters its row, whether the
+  * failure is temporary or not — nothing is retried inside the row
+  * (the row-level retry is [[Reliability.fallibleWithRetry]], not
+  * plugged in here). The DLQ row carries the error class and message.
   *
   * Idempotence: writes go to `batchId=`-suffixed directories with
   * overwrite mode, so a replayed batch overwrites rather than
@@ -70,17 +83,21 @@ object EnrichmentPipeline {
       .option("checkpointLocation", checkpointPath)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (ok, dlq) = Reliability.split(batch)
-        retry(maxRetries) {
-          ok.drop(ErrorCol).write.mode("overwrite")
-            .parquet(s"$okPath/batchId=$batchId")
-        }
-        retry(maxRetries) {
-          dlq.select(col("id"), col("value"),
-              col(s"$ErrorCol.clazz").as("error_class"),
-              col(s"$ErrorCol.msg").as("error_msg")).write.mode("overwrite")
-            .parquet(s"$dlqPath/batchId=$batchId")
-        }
+        // one evaluation per row feeds both sinks (see E6 above)
+        batch.persist()
+        try {
+          val (ok, dlq) = Reliability.split(batch)
+          retry(maxRetries) {
+            ok.drop(ErrorCol).write.mode("overwrite")
+              .parquet(s"$okPath/batchId=$batchId")
+          }
+          retry(maxRetries) {
+            dlq.select(col("id"), col("value"),
+                col(s"$ErrorCol.clazz").as("error_class"),
+                col(s"$ErrorCol.msg").as("error_msg")).write.mode("overwrite")
+              .parquet(s"$dlqPath/batchId=$batchId")
+          }
+        } finally batch.unpersist()
         // returning normally = offset commit = ack (K3); DLQ'd rows are
         // acked too (Either-variant semantics, SURVEY.md §3.3 note)
         ()

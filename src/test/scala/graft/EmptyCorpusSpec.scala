@@ -139,4 +139,29 @@ class EmptyCorpusSpec extends SparkSpec {
     assert(e.getMessage.contains("drained ZERO source rows"),
       s"expected the loud drain-guard failure, got: ${e.getMessage}")
   }
+
+  test("per-batch ingest gates return their typed empty result on the " +
+      "empty corpus (schemas read off the per-batch plan)") {
+    val expected = Map(
+      "stream_asof" -> ("event_id BIGINT, user_id BIGINT, " +
+        "click_ts_sec BIGINT, view_ts_sec BIGINT, gap_sec BIGINT"),
+      "stream_cdc_strip" -> ("doc_id BIGINT, n_chunks BIGINT, " +
+        "n_kept BIGINT, clean_text STRING, clean_len BIGINT"),
+      "stream_template_gate" ->
+        "doc_id BIGINT, n_grams BIGINT, n_heavy BIGINT, decision STRING",
+      "stream_unigram_gate" -> ("doc_id BIGINT, n_tokens BIGINT, " +
+        "n_oov BIGINT, min_known_tf BIGINT, decision STRING"),
+      "stream_affinity_gate" -> ("doc_id BIGINT, n_feat BIGINT, " +
+        "n_pos BIGINT, n_neg BIGINT, decision STRING"),
+      "stream_bloom_gate" ->
+        "doc_id BIGINT, n_pos_hit BIGINT, decision STRING")
+    def fields(t: org.apache.spark.sql.types.StructType) =
+      t.fields.toSeq.map(f => f.name -> f.dataType)
+    for ((q, ddl) <- expected) {
+      val out = SparkEntry.queries(q)(spark, emptyDir)
+      assert(fields(out.schema) ==
+        fields(org.apache.spark.sql.types.StructType.fromDDL(ddl)), q)
+      assert(out.count() == 0L, s"$q must be empty on the empty corpus")
+    }
+  }
 }

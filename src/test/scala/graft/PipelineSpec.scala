@@ -1,10 +1,42 @@
 package graft
 
 import java.io.IOException
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
 import graft.streaming.EnrichmentPipeline
+
+/** Services whose answer for a value changes from call to call — the
+  * non-deterministic failures the reference's `sometimes` service
+  * produces (Services.scala:100-121). A top-level object, so every task
+  * of the local-mode executor counts into the same call ledger. */
+object FlakyServices {
+  val calls = new ConcurrentHashMap[String, AtomicInteger]()
+
+  private def callNo(v: String): Int =
+    calls.computeIfAbsent(v, _ => new AtomicInteger()).incrementAndGet()
+
+  /** The first call for each value fails (temporary), later calls
+    * succeed. */
+  def firstCallFails(v: String): String =
+    if (callNo(v) == 1) throw new IOException(s"cold start: $v")
+    else s"stored $v"
+
+  /** Seeded 30% failures, half temporary and half unrecoverable, keyed
+    * on a hash of (value, call number), so a second evaluation of a
+    * row gets an independent answer. */
+  def seededFlaky(v: String): String = {
+    val h = scala.util.hashing.MurmurHash3.stringHash(s"$v#${callNo(v)}", 7)
+    val r = (h & 0x7fffffff) / 2147483648.0
+    if (r < 0.15) throw new IOException(s"timeout: $v")
+    else if (r < 0.3) throw new IllegalArgumentException(s"invalid $v")
+    else s"stored $v"
+  }
+}
 
 /** End-to-end reliable pipeline (SURVEY.md §7 minimum slice, with the
   * error routing the Rx variant famously lacked): file source →
@@ -117,5 +149,49 @@ class PipelineSpec extends SparkSpec {
     q.awaitTermination()
     assert(spark.read.parquet(ok).count() == 5)
     assert(spark.read.parquet(dlq).count() == 0)
+  }
+
+  /** Drains 120 rows in 3 micro-batches through `svc` and checks the
+    * delivery ledger: every id in exactly one sink, and one service
+    * call per row. Returns the DLQ'd ids. */
+  private def drainFlaky(tag: String, svc: String => String): Set[Long] = {
+    val in = tmpDir(s"$tag-in"); val ok = tmpDir(s"$tag-ok")
+    val dlq = tmpDir(s"$tag-dlq"); val cp = tmpDir(s"$tag-cp")
+    (0L until 120L).map(i => (i, s"Input Data: $i")).toDF("id", "value")
+      .repartition(3).write.mode("overwrite").parquet(in)
+    FlakyServices.calls.clear()
+    val q = EnrichmentPipeline.start(
+      spark.readStream.schema("id LONG, value STRING")
+        .option("maxFilesPerTrigger", 1).parquet(in),
+      ok, dlq, cp, svc)
+    q.awaitTermination()
+    val okIds = spark.read.parquet(ok).select("id").as[Long].collect()
+    val dlqIds = spark.read.parquet(dlq).select("id").as[Long].collect()
+    assert(okIds.distinct.length == okIds.length, "duplicate ok rows")
+    assert(dlqIds.distinct.length == dlqIds.length, "duplicate DLQ rows")
+    assert(okIds.toSet.intersect(dlqIds.toSet).isEmpty,
+      "rows written to BOTH sinks")
+    val lost = (0L until 120L).toSet -- okIds -- dlqIds
+    assert(lost.isEmpty, s"${lost.size} rows lost")
+    val calls = FlakyServices.calls.values().asScala.map(_.get()).toSeq
+    assert(calls.size == 120 && calls.forall(_ == 1),
+      s"expected one service call per row, got ${calls.sum} calls " +
+        s"for ${calls.size} rows")
+    dlqIds.toSet
+  }
+
+  test("a service whose calls disagree loses no row: one evaluation " +
+      "per row feeds both sinks (first call per value fails)") {
+    // one call per row, and that call fails: the DLQ rule sends every
+    // row to the DLQ, temporary failure or not
+    assert(drainFlaky("first-fail", FlakyServices.firstCallFails) ==
+      (0L until 120L).toSet)
+  }
+
+  test("seeded random service failures: no row lost or duplicated, " +
+      "one service call per row") {
+    val dlqIds = drainFlaky("seeded", FlakyServices.seededFlaky)
+    assert(dlqIds.nonEmpty && dlqIds.size < 120,
+      s"the schedule must route rows both ways, DLQ'd ${dlqIds.size}")
   }
 }

@@ -41,8 +41,9 @@ class TestdataContractSpec extends SparkSpec {
   test("events loader yields a session TimestampType ts under either " +
       "file encoding") {
     pin("events", "ts", TimestampType,
-      "Tables.events/StreamOps.eventsStream dispatch on the read " +
-        "schema (LongType nanos vs timestamp) — a third encoding needs " +
+      "Tables.decode (batch loader and stream replays) dispatches on " +
+        "the read schema (LongType nanos vs timestamp) — a third " +
+        "encoding needs " +
         "a new case there AND the epoch(ts) oracle convention re-checked " +
         "(19 ev_* + 10 stateful stream_* queries)")
     pin("events", "user_id", LongType,
